@@ -29,7 +29,9 @@ from pyspark.sql.window import Window
 
 def atomic_overwrite(df: DataFrame, table_dir: str) -> None:
     """Write df to a temp dir next to table_dir, then swap. The rename pair
-    is the commit point; a crash before it leaves the old table intact."""
+    is the commit point; a crash before it leaves the old table intact.
+    The old table may be a directory of part files or a single parquet
+    file (the fixture layout); the new one is always a directory."""
     parent = os.path.dirname(os.path.abspath(table_dir))
     tmp = os.path.join(parent, f".tmp-{uuid.uuid4().hex}")
     old = os.path.join(parent, f".old-{uuid.uuid4().hex}")
@@ -37,8 +39,10 @@ def atomic_overwrite(df: DataFrame, table_dir: str) -> None:
     if os.path.exists(table_dir):
         os.rename(table_dir, old)
     os.rename(tmp, table_dir)
-    if os.path.exists(old):
+    if os.path.isdir(old):
         shutil.rmtree(old)
+    elif os.path.exists(old):
+        os.remove(old)
 
 
 def overwrite_matching(

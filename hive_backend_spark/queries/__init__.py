@@ -3,7 +3,7 @@
 Modules map to SURVEY.md sections:
     relational  — §2.1-2.8 scans/filters/joins/aggs/sorts/set-ops/windows
     queue       — §2.9 queue semantics, batch-deterministic forms (Q1-Q13)
-    analytics   — showcase star-schema analytics (bench headliners)
+    analytics   — showcase star-schema analytics (TPC-H-shaped plans)
     tpch_extra  — remaining classic TPC-H query shapes adapted to the schema
     sessions    — event-stream behavioral analytics (sessionize/funnel/cohort)
     text        — §7 Phase 3: text analysis + exact dedup on `documents`

@@ -1,4 +1,4 @@
-"""Showcase star-schema analytics — the bench headliners.
+"""Showcase star-schema analytics.
 
 The reference has no GROUP BY at all (SURVEY §2.4 A5), so these are the
 free-surface analytics queries that prove the engine's Catalyst-first design:

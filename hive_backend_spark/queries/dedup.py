@@ -93,7 +93,7 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (node, label) table — tiny, |clustered docs| rows — is reused by every
 # consumer (cluster listing q79, canonical selection q90/q112), exactly as a
 # production pipeline persists its cluster assignment table. Same
-# applicationId keying/eviction as _BANDS_CACHE.
+# applicationId keying/eviction as _SIG_CACHE.
 _LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -183,36 +183,16 @@ def _drain(cache: dict) -> None:
                 pass  # session already stopped; nothing to release
 
 
-def clear_labels_cache() -> None:
-    """Unpersist and drop the cached cluster-label tables only (signature
-    AND candidate-pair tables stay warm — candidate generation has its own
-    cold-timed surface, q67, whose pre-attempt hook is
-    clear_candidates_cache). The bench clears this before every timed q79
-    attempt so the clustering pass alone is measured cold even under
-    min-of-N timing."""
-    _drain(_LABELS_CACHE)
-
-
 def clear_bands_cache() -> None:
     """Unpersist and drop every cached signature, candidate-pair,
-    cluster-label, and shingle-set table. Used by the bench harness to time
-    the signature + clustering (+ exact-join) passes cold."""
+    cluster-label, and shingle-set table, so the next dedup query rebuilds
+    them from ``documents``. Callers: perfbench's ``corpus_dedup`` workload
+    (once per pass, so each pass runs the signature and clustering chain
+    cold), the plan and parity tests (fresh plans per sweep), and
+    ``scripts/scale_proof.py`` (before each q82/q79 attempt)."""
     _drain(_SIG_CACHE)
     _drain(_LABELS_CACHE)
     _drain(_FP_SHINGLES_CACHE)
-    _drain(_PAIRS_CACHE)
-    _drain(_FPP_CACHE)
-
-
-def clear_candidates_cache() -> None:
-    """Unpersist and drop the candidate-pair tables only — the
-    fingerprint-level band self-join result (_FPP_CACHE) and its doc-level
-    expansion (_PAIRS_CACHE); signature and label tables stay. The bench
-    clears this before every timed q67 attempt so CANDIDATE GENERATION has
-    a declared cold-timed surface (r13 verdict task #1): q82 cold covers
-    the signature pass, q67 cold the band self-join + membership expansion,
-    q79 cold the clustering pass. Every other pair/label consumer reads the
-    warm tables, as declared in bench.SHARES_BAND_CACHE."""
     _drain(_PAIRS_CACHE)
     _drain(_FPP_CACHE)
 
@@ -224,11 +204,6 @@ def clear_candidates_cache() -> None:
 # escalation probe — a driver action per call) from the cached band table;
 # one persisted table per (session, corpus) is the same
 # persist-the-candidate-table discipline as _PAIRS_CACHE one level down.
-# Evicted by clear_bands_cache (it is band-derived state) and by
-# clear_candidates_cache (the bench's per-attempt cold reset for q67, the
-# declared candidate-generation surface — r13 verdict task #1), NOT by
-# clear_labels_cache — the cold-q79 contract covers the clustering pass
-# only and reads this table warm.
 _FPP_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 

@@ -7,7 +7,7 @@ pandas-UDF path, and shuffle partitioning sized for the active deployment.
 
 Local testing runs on ``local[N]``; the same builder settings are what we
 would ship to a 1000-executor cluster — only ``master`` and the partition
-counts change (see ``tune_for_scale``).
+counts change (see the sizing notes above ``DEFAULT_CONFS``).
 """
 
 from __future__ import annotations
@@ -17,9 +17,10 @@ import os
 from pyspark.sql import SparkSession
 
 # Partition sizing rationale (100 TB posture):
-#   - spark.sql.shuffle.partitions: on a real cluster this should be
-#     ~2-3x total executor cores, or left to AQE coalescing from a high
-#     initial number. Locally 32 matches local[32].
+#   - spark.sql.shuffle.partitions: on a real cluster set it per
+#     deployment to max(2x total executor cores, largest shuffle input /
+#     128 MB), so every core is busy and no partition sorts more than
+#     ~128 MB; AQE coalesces the excess. Locally 32 matches local[32].
 #   - files.maxPartitionBytes 128m keeps scan tasks memory-bounded.
 #   - autoBroadcastJoinThreshold 64m: the dimension tables here (region,
 #     nation, customer, supplier, part at any realistic SF) are the
@@ -71,39 +72,6 @@ def _prepend_pythonpath(env: dict[str, str]) -> None:
     parts = env.get("PYTHONPATH", "").split(os.pathsep)
     if _REPO_ROOT not in parts:
         env["PYTHONPATH"] = os.pathsep.join([_REPO_ROOT] + [p for p in parts if p])
-
-
-def tune_for_scale(
-    total_executor_cores: int,
-    shuffle_input_bytes: int,
-    target_partition_bytes: int = 128 * 1024**2,
-) -> dict[str, str]:
-    """The confs that change with deployment size, computed from the two
-    numbers that actually matter: total cores and bytes entering the
-    largest shuffle.
-
-    Sizing rule: initial shuffle partitions = max(2x cores, shuffle input /
-    target partition size) — enough parallelism to keep every core busy at
-    small inputs, and at large inputs enough partitions that each sorts/
-    spills at most ~128 MB (memory-bounded regardless of data size). AQE
-    coalesces the excess at runtime (advisory size = target/2 so coalesced
-    post-filter partitions still land near the target), so overshooting the
-    initial count costs little; undershooting causes spill.
-
-    Examples: local[32] over sf0.1 (~50 MB shuffles) -> 64 partitions;
-    1000 executors x 4 cores over a 100 TB scan shuffling ~10 TB ->
-    max(8000, 81920) = 81920 partitions.
-    """
-    parts = max(2 * total_executor_cores, shuffle_input_bytes // target_partition_bytes)
-    return {
-        "spark.sql.shuffle.partitions": str(parts),
-        "spark.sql.files.maxPartitionBytes": str(target_partition_bytes),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(target_partition_bytes // 2),
-        # static cluster-size-dependent knobs documented for completeness;
-        # broadcast threshold rises with executor memory, never above ~1/8
-        # of per-executor heap available to the build side
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    }
 
 
 def get_spark(app_name: str = "hive-backend-spark", master: str | None = None) -> SparkSession:

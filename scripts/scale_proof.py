@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Empirical scale-proof, three-point edition (round-10 verdict task #1):
-time the most expensive headline queries at sf0.1, sf1.0 AND sf3.2 (10x
-and 32x rows, built by make_scaledata.py) in ONE session with the bench.py
-methodology (noop-format write so every output column executes; min-of-N;
-q82/q79 cold via cache clears), and report each query's scaling exponents
+time the most expensive queries at sf0.1, sf1.0 AND sf3.2 (10x and 32x
+rows, built by make_scaledata.py) in ONE session (noop-format write so every
+output column executes; min-of-N; q82/q79 cold: clear_bands_cache() before
+every attempt), and report each query's scaling exponents
 
     a = log(t_big / t_small) / log(size_ratio)      (t ~ N^a)
 
@@ -19,7 +19,13 @@ reported, but the asymptotic leg is the graded number.
 
 All SFs of one query time inside the same session seconds apart, so the
 ratios tolerate a constant background factor even when absolute times are
-inflated (see bench calibration).
+inflated.
+
+q79's cold attempt clears the signature and candidate-pair tables along with
+the cluster labels, so its time includes the signature and candidate passes.
+Its absolute times are therefore not comparable with those recorded in
+BENCH_sf*_r1x.json (which timed the clustering pass alone); exponents
+measured within one run stay comparable.
 
 Output: ONE JSON line — committed as BENCH_sf3_r11.json. Falls back to the
 two-point protocol if the sf3.2 directory is absent.
@@ -81,7 +87,7 @@ QUERIES = [
     "q137_ngram_novelty",
     "q142_duplicate_ngram_spans",
     "q155_kmeans_train",
-    # round-13 additions (r12 verdict task #8): the three heaviest bench
+    # round-13 additions (r12 verdict task #8): the three heaviest
     # rows previously measured only to sf3.2 get the 6.4x lever too
     "q345_delta_checkpoint_compose",
 ]
@@ -106,29 +112,20 @@ def main() -> None:
     spark = get_spark("hive-backend-spark-scale-proof")
     specs = all_queries()
 
-    # warm up JVM codegen + python worker pool (bench.py discipline)
+    # warm up JVM codegen + python worker pool before anything is timed
     specs["q01_priority_dequeue"].fn(spark, SF01).count()
     par = spark.sparkContext.defaultParallelism
     spark.range(0, par * 10, 1, par).mapInPandas(lambda it: it, "id long").count()
 
-    from hive_backend_spark.queries.dedup import (
-        clear_bands_cache,
-        clear_candidates_cache,
-        clear_labels_cache,
-    )
+    from hive_backend_spark.queries.dedup import clear_bands_cache
 
-    COLD_RESET = {
-        "q82_minhash_bands": clear_bands_cache,
-        "q67_lsh_candidates": clear_candidates_cache,
-        "q79_dup_clusters": clear_labels_cache,
-    }
+    cold = {"q82_minhash_bands", "q79_dup_clusters"}
 
     def run(name: str, sf_dir: str, attempts: int) -> float:
-        reset = COLD_RESET.get(name)
         best = float("inf")
         for _ in range(attempts):
-            if reset is not None:
-                reset()
+            if name in cold:
+                clear_bands_cache()
             t0 = time.perf_counter()
             specs[name].fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite"

@@ -5,6 +5,7 @@ scenario style (SURVEY §5): build state, mutate, assert invariants."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -114,6 +115,39 @@ def test_atomic_overwrite_leaves_no_temp(spark, conn_table, tmp_path):
     parent = os.path.dirname(conn_table)
     MU.compact(spark, conn_table)
     leftovers = [f for f in os.listdir(parent) if f.startswith((".tmp-", ".old-"))]
+    assert leftovers == []
+
+
+def test_mutations_rewrite_single_file_table(spark, tmp_path):
+    """The fixtures store each table as ONE .parquet file, not a directory
+    of part files. An upsert and a retention rewrite on that layout must
+    swap in the new table, so the next read returns the new rows, and
+    leave no temp or old entry behind."""
+    from datetime import timedelta
+
+    path = str(tmp_path / "events.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, "events.parquet"), path)
+    before = spark.read.parquet(path)
+    n = before.count()
+    rows = before.orderBy("event_id").limit(2).collect()
+    incoming = spark.createDataFrame(
+        [r.asDict() | {"ts": r.ts + timedelta(days=1), "event_type": "upserted"} for r in rows]
+        + [rows[0].asDict() | {"event_id": -1, "event_type": "upserted"}],
+        schema=before.schema,
+    )
+    MU.upsert_latest(spark, path, incoming, ["event_id"], "ts")
+    after = spark.read.parquet(path)
+    assert after.count() == n + 1
+    assert after.filter(F.col("event_type") == "upserted").count() == 3
+
+    cutoff_us = after.agg(F.expr("percentile(unix_micros(ts), 0.5)")).collect()[0][0]
+    cutoff = F.timestamp_micros(F.lit(int(cutoff_us)))
+    deleted = MU.retention_rewrite(spark, path, "ts", cutoff)
+    after = spark.read.parquet(path)
+    assert deleted > 0
+    assert after.count() + deleted == n + 1
+    assert after.filter(F.col("ts") < cutoff).count() == 0
+    leftovers = [f for f in os.listdir(tmp_path) if f.startswith((".tmp-", ".old-"))]
     assert leftovers == []
 
 
@@ -266,24 +300,6 @@ def test_salted_broadcast_join_matches_plain(spark):
     want = events.join(F.broadcast(dim), "event_type")
     assert got.count() == want.count()
     assert got.select(F.sum("type_total")).collect() == want.select(F.sum("type_total")).collect()
-
-
-def test_tune_for_scale_sizing():
-    """Partition sizing must scale with both knobs: cores floor at small
-    inputs, byte-derived count at large inputs, memory-bounded partitions."""
-    from hive_backend_spark.session import tune_for_scale
-
-    small = tune_for_scale(total_executor_cores=32, shuffle_input_bytes=50 * 1024**2)
-    assert small["spark.sql.shuffle.partitions"] == "64"  # 2x cores floor
-
-    big = tune_for_scale(
-        total_executor_cores=4000, shuffle_input_bytes=10 * 1024**4
-    )  # 1000 executors x 4 cores shuffling 10 TB
-    assert int(big["spark.sql.shuffle.partitions"]) == 10 * 1024**4 // (128 * 1024**2)
-    # every partition sorts at most the target bytes
-    assert int(big["spark.sql.files.maxPartitionBytes"]) == 128 * 1024**2
-    # AQE advisory below target so post-filter coalescing lands near it
-    assert int(big["spark.sql.adaptive.advisoryPartitionSizeInBytes"]) < 128 * 1024**2
 
 
 def test_zorder_layout_prunes_box_queries(spark, tmp_path):

@@ -1115,58 +1115,44 @@ def test_top20_plan_shuffle_counts_do_not_grow(spark, sf_dir):
     )
 
 
-def test_calibration_canaries_frozen():
-    """bench.py's calibration factor is only meaningful if the three canary
-    queries NEVER change: their measured drift must be machine drift, not
-    code. This pins md5(source || oracle) for each — if you need to touch
-    one of these queries, you must also re-base CALIBRATION_REF against a
-    fresh idle-box record and document the re-base in COVERAGE.md."""
-    import hashlib
+def test_perfbench_tracer_patch_points_survive():
+    """perfbench's traced run (``--trace 1``) wraps engine functions by
+    name: every query module's ``load_table`` import, the dedup operators,
+    the ``VersionedStateTable`` methods and the dedup queries' cache
+    accessors. A rename there breaks the traced run (or, for a query
+    module's ``load_table``, silently drops its spans). Install must find
+    every name, and uninstall must put every original back."""
+    import importlib
+    import importlib.util
     import inspect
+    import pkgutil
 
-    from hive_backend_spark.registry import all_queries
+    import hive_backend_spark.queries as queries
 
-    PINNED = {
-        "q01_priority_dequeue": "7ca74345ef8ae6a11d4221359c2b93f2",
-        "q44_order_priority_check": "22d982169322e659053aade8a85fb944",
-        "q64_exact_dup_groups": "57b44cb152e0967739bac3a6998e0fc4",
-        # round-12 additions (r11 verdict task #3): two multi-second
-        # canaries so the drift factor isn't estimated from sub-second
-        # queries alone; CALIBRATION_REF re-based to BENCH_full_r11.json
-        # re-pinned r13 (optimization round): q79 became a pure projection
-        # of the sized label cache (sizes ride the label aggregate; fp-pair
-        # table persisted once per session) — measured 4.6 -> 2.3 s at
-        # sf0.1. CALIBRATION_REF is re-based to the r13 idle-box record,
-        # documented in COVERAGE.md + OPTIMIZATION_r13.md.
-        "q79_dup_clusters": "7ef9915c1eb6797a64a739648ddbbe6e",
-        "q171_decontamination_ladder": "ab3c48187c85276db5b6002844498829",
-        # round-13 additions (r12 verdict tasks #1/#5): q331 joins the
-        # FACTOR set (multi-second, decode-bound, machine-proportional);
-        # q292 joins as a SMOKE canary after its drift was traced to
-        # first-attempt codegen/JIT cost, so its number is tracked but
-        # never feeds the factor.
-        "q292_mahalanobis_outliers": "d6a06caed34125f65c9b96515455ae4e",
-        "q331_progressive_jpeg_stats": "c2b07f3c0874d6a074b2b4870307351b",
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_spans", os.path.join(root, "perfbench", "spans.py")
+    )
+    spans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spans)
+
+    tracer = spans.Tracer()
+    try:
+        tracer.install()
+        patched = list(tracer._undo)
+        for owner, attr, orig in patched:
+            assert getattr(owner, attr) is not orig, f"{owner.__name__}.{attr}"
+    finally:
+        tracer.uninstall()
+    for owner, attr, orig in patched:
+        assert getattr(owner, attr) is orig, f"{owner.__name__}.{attr} not restored"
+
+    loaders = {
+        f"{queries.__name__}.{info.name}"
+        for info in pkgutil.iter_modules(queries.__path__)
+        if "load_table(" in inspect.getsource(
+            importlib.import_module(f"{queries.__name__}.{info.name}")
+        )
     }
-    specs = all_queries()
-    import bench
-
-    assert set(bench.CALIBRATION_REF) == set(PINNED)
-    assert set(bench.FACTOR_CANARIES) <= set(PINNED)
-    # the factor must come from multi-second canaries only (sub-second
-    # refs are overhead-dominated — the r12 dispersion nit). Threshold
-    # relaxed 3.0 -> 2.0 at the r13 re-base: the optimization round
-    # halved q79 (4.3 -> 2.3 s) and the factor canaries are still the
-    # heaviest frozen queries in the suite. NOTE (r13 advice): q79's ref
-    # is 2.30 — only 0.3 s of headroom. If a future legitimate speedup of
-    # a frozen canary (or a faster reference box at the next re-base)
-    # trips this, SWAP IN a heavier frozen query (q222/q171-class) rather
-    # than relaxing the bound again — the bound exists so the factor is
-    # never estimated from overhead-dominated timings.
-    assert all(bench.CALIBRATION_REF[q] > 2.0 for q in bench.FACTOR_CANARIES)
-    for name, want in PINNED.items():
-        s = specs[name]
-        got = hashlib.md5(
-            (inspect.getsource(s.fn) + "||" + (s.oracle or "")).encode()
-        ).hexdigest()
-        assert got == want, f"{name} changed — canary must stay frozen"
+    wrapped = {owner.__name__ for owner, attr, _ in patched if attr == "load_table"}
+    assert loaders and wrapped == loaders
