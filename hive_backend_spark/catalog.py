@@ -64,13 +64,27 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load tables and register each as a temp view (idempotent).
 
-    Also normalizes runtime confs (UTC session timezone etc.) so results are
-    comparable with the DuckDB oracle regardless of who built the session.
+    ``load_table`` also normalizes runtime confs (UTC session timezone etc.)
+    so results are comparable with the DuckDB oracle regardless of who
+    built the session.
     """
-    ensure_runtime_confs(spark)
     out: dict[str, DataFrame] = {}
     for name in names:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def session_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
+    """The ``(applicationId, sf_dir)`` entry of a derived-table cache, made
+    by ``build()`` on a miss. applicationId is stable per live session and
+    never reused by a successor session the way id(spark) can be; entries
+    of other (stopped) sessions are evicted on every lookup."""
+    app_id = spark.sparkContext.applicationId
+    for k in [k for k in cache if k[0] != app_id]:
+        del cache[k]
+    key = (app_id, sf_dir)
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]

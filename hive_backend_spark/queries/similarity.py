@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, session_cached
 from ..registry import register
 
 
@@ -238,7 +238,7 @@ _Q101_QUANT = """
 _SPLIT_CAP = 128
 _SPLIT_MAXB = 16
 _CENTROIDS_CACHE: dict[tuple[str, str], tuple] = {}
-_SPLIT_CACHE: dict[tuple, dict] = {}
+_SPLIT_CACHE: dict[tuple[str, str], dict] = {}
 
 
 def _walsh_planes(dim: int = 64, maxb: int = _SPLIT_MAXB):
@@ -267,25 +267,15 @@ def _split_bits(cnt: int, cap: int = _SPLIT_CAP, maxb: int = _SPLIT_MAXB) -> int
     return b
 
 
-def _ivf_centroids(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> tuple:
+def _ivf_centroids(spark: SparkSession, sf_dir: str) -> tuple:
     """(labels, k x dim centroid matrix), rows sorted by centroid id. Built
     by the same posexplode -> per-(label, pos) mean aggregation as q73 —
     the shuffle carries k x dim rows, never vectors — then collected (k
-    rows). Cached per applicationId like the dedup band tables.
-
-    refine_iters > 0 runs that many Lloyd rounds of
-    operators/clustering.kmeans_train from the label-mean seed — the
-    trained-codebook path every IVF consumer (q71/q74/q116/q127/q132/
-    q154 geometry) can opt into; the default (0) stays the label-mean
-    quantizer the DuckDB oracles replay."""
+    rows): the label-mean quantizer the DuckDB oracles replay. Cached per
+    (applicationId, sf_dir) like the dedup band tables."""
     import numpy as np
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _CENTROIDS_CACHE if k[0] != app_id]:
-        del _CENTROIDS_CACHE[k]
-    key = (app_id, sf_dir, refine_iters)
-    out = _CENTROIDS_CACHE.get(key)
-    if out is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         vecs = emb.select("label", F.col("embedding").cast("array<double>").alias("v"))
         rows = (
@@ -304,20 +294,9 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> t
         rows.sort(key=lambda r: r["label"])
         labels = np.array([r["label"] for r in rows])
         cents = np.stack([np.array(r["c"], dtype=np.float64) for r in rows])
-        if refine_iters > 0:
-            from ..operators.clustering import kmeans_train
+        return labels, cents
 
-            cents, _ = kmeans_train(
-                vecs.select("v"),
-                cents,
-                max_iter=refine_iters,
-                min_iter=refine_iters,
-                tol=0.0,
-                strict=False,
-            )
-        out = (labels, cents)
-        _CENTROIDS_CACHE[key] = out
-    return out
+    return session_cached(_CENTROIDS_CACHE, spark, sf_dir, build)
 
 
 def _coarse_cells(m, cents, cnorms, labels):
@@ -335,7 +314,7 @@ def _coarse_cells(m, cents, cnorms, labels):
     return labels[np.argmax(sims, axis=1)]
 
 
-def _ivf_split_stats(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> dict:
+def _ivf_split_stats(spark: SparkSession, sf_dir: str) -> dict:
     """cell -> (cnt, b, sums[_SPLIT_MAXB]) for the hot-cell split: one
     map-side-combined pass over the corpus (per-batch pandas groupby emits
     k partial rows, Spark sums them), then a bounded collect of k rows —
@@ -346,13 +325,8 @@ def _ivf_split_stats(spark: SparkSession, sf_dir: str, refine_iters: int = 0) ->
 
     from ..operators.dedup import spread
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _SPLIT_CACHE if k[0] != app_id]:
-        del _SPLIT_CACHE[k]
-    key = (app_id, sf_dir, refine_iters)
-    out = _SPLIT_CACHE.get(key)
-    if out is None:
-        labels, cents = _ivf_centroids(spark, sf_dir, refine_iters)
+    def build():
+        labels, cents = _ivf_centroids(spark, sf_dir)
         cnorms = np.linalg.norm(cents, axis=1)
         planes = _walsh_planes()
 
@@ -380,7 +354,7 @@ def _ivf_split_stats(spark: SparkSession, sf_dir: str, refine_iters: int = 0) ->
             )
             .collect()  # bounded: k quantizer cells (KB-scale model state)
         )
-        out = {
+        return {
             r["cell"]: (
                 int(r["cnt"]),
                 _split_bits(int(r["cnt"])),
@@ -388,11 +362,11 @@ def _ivf_split_stats(spark: SparkSession, sf_dir: str, refine_iters: int = 0) ->
             )
             for r in stats
         }
-        _SPLIT_CACHE[key] = out
-    return out
+
+    return session_cached(_SPLIT_CACHE, spark, sf_dir, build)
 
 
-def _ivf_assign(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> DataFrame:
+def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, cell, subcell, v): every vector routed to its
     nearest centroid by cosine (ties -> smallest centroid id), then to a
     hot-cell-split subcell (see the section comment above: over-cap cells
@@ -406,8 +380,8 @@ def _ivf_assign(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> Data
 
     from ..operators.dedup import spread
 
-    labels, cents = _ivf_centroids(spark, sf_dir, refine_iters)
-    stats = _ivf_split_stats(spark, sf_dir, refine_iters)
+    labels, cents = _ivf_centroids(spark, sf_dir)
+    stats = _ivf_split_stats(spark, sf_dir)
     cnorms = np.linalg.norm(cents, axis=1)
     planes = _walsh_planes()
     shifts = 1 << np.arange(_SPLIT_MAXB, dtype=np.int64)

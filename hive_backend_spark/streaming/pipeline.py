@@ -17,8 +17,10 @@ Reference semantics reproduced (sites cited per row of SURVEY §2.9):
 
 Scale posture: file sources bound ingest with maxFilesPerTrigger; state
 stores are keyed by (user|id) and bounded by watermark eviction; the
-foreachBatch sink appends partitioned parquet — no driver-side collect
-anywhere.
+foreachBatch sinks write partitioned parquet. Driver-side collects are
+bounded per trigger: the EWMA sink's 1-row state and count, the
+inverted-index sink's touched-bucket set, the admission sink's batch
+band rows and probe hits; the carryover sink collects nothing.
 """
 
 from __future__ import annotations
@@ -591,8 +593,8 @@ def _state_fs(spark: SparkSession, path: str):
 class VersionedStateTable:
     """Partitioned, versioned parquet state for foreachBatch sinks:
     ``root/<part_key>=<P>/state_version=<N>`` holds partition P's state
-    after the last batch <= N that touched it. The contract every consumer
-    (queue backlog, standing index) relies on:
+    after the last batch <= N that touched it. The contract every
+    partitioned consumer (standing index) relies on:
 
       - a trigger rewrites ONLY the partitions it touched — per-trigger
         write cost is O(touched state), not O(total state);
@@ -726,9 +728,9 @@ class VersionedStateTable:
 def read_pending_state(
     spark: SparkSession, pending_dir: str, before_batch: int | None = None
 ) -> DataFrame:
-    """The carryover backlog as of a batch boundary (the band-partitioned
-    VersionedStateTable read)."""
-    return VersionedStateTable(spark, pending_dir, ROUTED_SCHEMA, "band").read_latest(
+    """The carryover backlog as of a batch boundary: the latest version
+    (< before_batch if given) of the one-partition backlog table."""
+    return VersionedStateTable(spark, pending_dir, ROUTED_SCHEMA, "backlog").read_latest(
         before_batch
     )
 
@@ -748,35 +750,30 @@ def run_prioritized_carryover(
     the reference's per-poll LIMIT, db.mjs:285-293, is the per-batch form
     ``run_two_phase`` mirrors).
 
-    Mechanics: the pending backlog lives in a VERSIONED parquet state
-    table PARTITIONED BY PRIORITY BAND
-    (pending_dir/band=B/state_version=N = band B's backlog after the last
-    batch <= N that TOUCHED it). Each micro-batch unions the new arrivals
-    with every band's latest prior version, takes the global top-k by
-    (priority desc, created_at, id) — TakeOrderedAndProject, a distributed
-    per-partition top-k + k-row merge, never a global sort or a
-    single-task state funnel — serves it to the processed table's batch_id
-    partition, and rewrites ONLY the bands the trigger touched (bands with
-    arrivals or served rows). An untouched band's state files are not
-    rewritten at all — per-trigger write cost is O(touched backlog), not
-    O(total backlog), which is what lets a deep low-priority backlog sit
-    cheaply while the hot band churns.
+    Mechanics: the pending backlog is ONE versioned parquet state table,
+    the queue's single ``updates`` table in streaming form
+    (pending_dir/backlog=all/state_version=N = the backlog after batch N).
+    Each micro-batch unions the new arrivals with the latest prior
+    version, takes the global top-k by (priority desc, created_at, id) —
+    TakeOrderedAndProject, a distributed per-partition top-k + k-row
+    merge, never a global sort or a single-task state funnel — serves it
+    to the processed table's batch_id partition, and writes the remainder
+    as version N. A drained backlog still writes version N (the
+    ``_EMPTY`` sentinel), so it supersedes the old rows.
 
-    Restart idempotence: a replay of batch N re-reads each band's latest
-    version < N (pruning keeps it: per band, the newest version <= N-1
-    survives until a LATER batch supersedes it) and overwrites exactly its
-    own outputs (processed batch_id=N partition, band/state_version=N for
-    the same deterministic touched set), so the crash window between sink
-    write and checkpoint commit duplicates nothing. All state discovery
-    and pruning go through the Hadoop FS API (``_state_fs``), so
+    Restart idempotence: a replay of batch N re-reads the latest version
+    < N (pruning keeps the newest version <= N-1 until a LATER batch
+    supersedes it) and overwrites exactly its own outputs (processed
+    batch_id=N partition, state_version=N), so the crash window between
+    sink write and checkpoint commit duplicates nothing. All state
+    discovery and pruning go through the Hadoop FS API (``_state_fs``), so
     checkpoint/state dirs on HDFS or S3 behave identically to local disk.
     State size is the backlog itself — the irreducible state of any
     queue — held distributed in parquet, not in executor memory."""
-    band_of = F.coalesce(F.col("priority"), F.lit(0))
 
     def sink(arrivals: DataFrame, batch_id: int) -> None:
         sess = arrivals.sparkSession
-        state = VersionedStateTable(sess, pending_dir, ROUTED_SCHEMA, "band")
+        state = VersionedStateTable(sess, pending_dir, ROUTED_SCHEMA, "backlog")
         carry = state.read_latest(before_batch=batch_id)
         avail = arrivals.unionByName(carry)
         # (priority, created_at, id) is a TOTAL order (id unique), so the
@@ -790,15 +787,6 @@ def run_prioritized_carryover(
             .limit(batch_size)
             .localCheckpoint()  # k rows, pinned so serve and remainder agree
         )
-        # touched = bands with new arrivals (state grows) or served rows
-        # (state shrinks) — a |bands|-bounded collect (priority codomain)
-        touched = {
-            r["b"]
-            for r in arrivals.select(band_of.alias("b")).distinct().collect()
-        } | {
-            r["b"]
-            for r in picked.select(band_of.alias("b")).distinct().collect()
-        }
         rest = avail.join(picked.select("id"), "id", "left_anti").select(
             *[f.name for f in ROUTED_SCHEMA.fields]
         )
@@ -810,7 +798,7 @@ def run_prioritized_carryover(
             .partitionBy("batch_id")
             .parquet(processed_dir)
         )
-        state.overwrite_parts(rest, band_of, touched, batch_id)
+        state.overwrite_parts(rest, F.lit("all"), {"all"}, batch_id)
         state.prune(batch_id)
 
     stream = route_events(read_event_stream(spark, source_dir))

@@ -620,20 +620,6 @@ def test_kmeans_nonconvergence_raises(spark):
         kmeans_train(_km_vecs(spark), _km_seed(spark, 6), max_iter=1, tol=0.0)
 
 
-def test_ivf_consumers_accept_trained_centroids(spark):
-    """The IVF family consumes kmeans_train output: _ivf_assign with
-    refine_iters routes every vector to a refined cell, and refinement
-    must not lose or invent vectors."""
-    from hive_backend_spark.queries.similarity import _ivf_assign, _ivf_centroids
-
-    base = _ivf_assign(spark, SF_DIR)
-    refined = _ivf_assign(spark, SF_DIR, refine_iters=2)
-    assert refined.count() == base.count()
-    labels, cents = _ivf_centroids(spark, SF_DIR, refine_iters=2)
-    cells = {r["cell"] for r in refined.select("cell").distinct().collect()}
-    assert cells <= set(labels.tolist())
-
-
 def test_decode_media_real_png(spark):
     """stub=False REALLY decodes 8-bit non-interlaced PNG through the Arrow
     map task: gray / RGB / RGBA blobs built by the stdlib encoder with a

@@ -882,23 +882,21 @@ def test_carryover_replay_after_crash_is_idempotent(spark, stream_src, tmp_path)
     assert after.groupBy("id").count().filter("count > 1").count() == 0
 
 
-@_HEAVY_SWEEP
-def test_carryover_untouched_band_not_rewritten(spark, tmp_path):
-    """Per-trigger state write cost must be O(touched backlog): a priority
-    band with no arrivals and no served rows in a trigger keeps its OLD
-    state_version directory untouched — no new version, no rewrite. Source:
-    batch 0 mixes view (band 0) and click (band 1) arrivals; batches 1-2
-    are click-only and the head is all clicks, so band 0 is never touched
-    again. After the run band=0 must still hold exactly state_version=0
-    (the batch-0 files, never rewritten), while band=1 advanced and pruned.
-    The final backlog must still equal the greedy simulation."""
+def test_carryover_backlog_is_one_versioned_table(spark, tmp_path):
+    """The carryover backlog is ONE versioned state table: every trigger
+    writes the whole remainder as a new state_version of its single
+    partition and prunes all but the replay-safe previous one. Source:
+    batch 0 mixes views and clicks, batches 1-2 are click-only, so the
+    backlog keeps views that are never served. A second run whose first
+    trigger serves the whole backlog must leave it empty: the drained
+    version (an ``_EMPTY`` sentinel, no data files) supersedes the old
+    one."""
     import datetime
+    import glob as g
 
-    src = tmp_path / "src"
-    src.mkdir()
     t0 = datetime.datetime(2020, 1, 1)
 
-    def mk(batch, rows):
+    def mk(src, batch, rows):
         df = spark.createDataFrame(
             [
                 (i, t0 + datetime.timedelta(seconds=i), i, et, "{}")
@@ -908,31 +906,31 @@ def test_carryover_untouched_band_not_rewritten(spark, tmp_path):
             "event_type string, props string",
         )
         df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
-        import glob as g
-        import shutil
-
         part = g.glob(str(tmp_path / "stage" / "part-*.parquet"))[0]
+        src.mkdir(exist_ok=True)
         shutil.move(part, str(src / f"batch_{batch}.parquet"))
 
-    mk(0, [(i, "view") for i in range(10)] + [(100 + i, "click") for i in range(10)])
-    mk(1, [(200 + i, "click") for i in range(6)])
-    mk(2, [(300 + i, "click") for i in range(6)])
+    src = tmp_path / "src"
+    mk(src, 0, [(i, "view") for i in range(10)] + [(100 + i, "click") for i in range(10)])
+    mk(src, 1, [(200 + i, "click") for i in range(6)])
+    mk(src, 2, [(300 + i, "click") for i in range(6)])
 
     processed = str(tmp_path / "processed")
-    pending = str(tmp_path / "pending")
+    pending = tmp_path / "pending"
     ckpt = str(tmp_path / "ckpt")
-    S.run_prioritized_carryover(spark, src.as_posix(), processed, pending, ckpt, batch_size=5)
+    S.run_prioritized_carryover(
+        spark, src.as_posix(), processed, str(pending), ckpt, batch_size=5
+    )
 
-    assert sorted(os.listdir(os.path.join(pending, "band=0"))) == [
-        "state_version=0"
-    ], "band 0 was rewritten despite no arrivals and no serves after batch 0"
-    b1 = sorted(os.listdir(os.path.join(pending, "band=1")))
-    assert b1 == ["state_version=1", "state_version=2"], b1  # 0 pruned
+    parts = [p for p in pending.iterdir() if p.is_dir()]
+    assert len(parts) == 1, parts
+    versions = sorted(v.name for v in parts[0].iterdir())
+    assert versions == ["state_version=1", "state_version=2"], versions  # 0 pruned
 
     # clicks always outrank views: all 22 clicks served across 3 batches
     # of 5 would need 25 slots, so 15 clicks served, 7 pending; no view
-    # ever served — band 0 pending is all 10 views
-    left = S.read_pending_state(spark, pending)
+    # ever served — the backlog keeps all 10 views
+    left = S.read_pending_state(spark, str(pending))
     got = {r["id"] for r in left.select("id").collect()}
     served = {
         r["id"]
@@ -942,6 +940,23 @@ def test_carryover_untouched_band_not_rewritten(spark, tmp_path):
     views = set(range(10))
     assert served == set(sorted(clicks)[:15])
     assert got == views | (clicks - served)
+
+    # trigger 0 carries 3 of 8 rows; trigger 1 adds 2, so all 5 are served
+    drain = tmp_path / "drain"
+    mk(drain, 0, [(400 + i, "view") for i in range(8)])
+    mk(drain, 1, [(500 + i, "view") for i in range(2)])
+    pending2 = str(tmp_path / "pending2")
+    S.run_prioritized_carryover(
+        spark,
+        drain.as_posix(),
+        str(tmp_path / "processed2"),
+        pending2,
+        str(tmp_path / "ckpt2"),
+        batch_size=5,
+    )
+    kept = S.read_pending_state(spark, pending2, before_batch=1)
+    assert {r["id"] for r in kept.select("id").collect()} == {405, 406, 407}
+    assert S.read_pending_state(spark, pending2).count() == 0
 
 
 def test_batch_type_chi2_kernel(spark, stream_src):
